@@ -5,12 +5,12 @@ Re-expresses the capabilities of the reference PDF extraction service
 Spark DataFrame job:
 
 - ``kernels/``   pure per-document Python/numpy kernels (no Spark imports).
-  These are the single source of truth for extraction semantics; the
-  single-process oracle (``oracle.py``) and the vectorized Arrow stages
-  (``operators/``) both call them, so byte-identity between oracle and
-  pipeline is by construction and tests guard against batching drift.
-- ``operators/`` mapInPandas / pandas_udf stages over Arrow record batches
-  (never per-row Python UDFs).
+  These are the single source of truth for extraction semantics; only the
+  single-process oracle (``oracle.py``) routes between them.
+- ``operators/`` the fused mapInPandas stage over Arrow record batches
+  (never per-row Python UDFs). It calls ``oracle.extract_document``, not
+  the kernels, so byte-identity between oracle and pipeline is by
+  construction and tests guard against batching drift.
 - ``sources/``   IO facade (Iceberg-when-available, parquet fallback),
   lineage sidecar, checkpoint-resume.
 - ``functions/`` training-data-pipeline operators: dedup (exact / MinHash-LSH

@@ -1,16 +1,8 @@
-"""Vectorized extraction stages (mapInPandas over Arrow record batches).
+"""Vectorized extraction stage (mapInPandas over Arrow record batches).
 
-The engine's operator API per SURVEY.md §2.11: a fused production stage
-(``extract_stage``) plus the composable staged operators
-(``decode_pages`` / ``ocr_pages`` / ``clause_stage`` / ``table_stage`` /
-``html_stage``) for plan-level composition and inspection.
+The engine's operator API per SURVEY.md §2.11: one fused stage,
+``extract_stage``, that runs ``oracle.extract_document`` per document,
+so routing and error rows have a single implementation.
 """
 
-from .stages import (  # noqa: F401
-    clause_stage,
-    decode_pages,
-    extract_stage,
-    html_stage,
-    ocr_pages,
-    table_stage,
-)
+from .stages import extract_stage  # noqa: F401

@@ -66,30 +66,3 @@ LINEAGE = T.StructType(
         ),
     ]
 )
-
-# intermediate page rows for the staged (exploded) API; ``images``
-# carries the page's embedded images (S4, reference python/app.py:44-57)
-# in extraction index order (O4)
-PAGE = T.StructType(
-    [
-        T.StructField("url", T.StringType(), False),
-        T.StructField("page_no", T.IntegerType(), False),
-        T.StructField("width", T.IntegerType(), True),
-        T.StructField("height", T.IntegerType(), True),
-        T.StructField("pixels", T.BinaryType(), True),
-        T.StructField(
-            "images",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("idx", T.IntegerType(), True),
-                        T.StructField("width", T.IntegerType(), True),
-                        T.StructField("height", T.IntegerType(), True),
-                        T.StructField("pixels", T.BinaryType(), True),
-                    ]
-                )
-            ),
-            True,
-        ),
-    ]
-)

@@ -28,6 +28,12 @@ from pyspark.sql import SparkSession
 
 ARROW_BATCH_ROWS = 2048
 ARROW_BATCH_BYTES = 16 * 1024 * 1024
+# the --py-files / addPyFile archive of this package
+PACKAGE_ZIP = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "dist",
+    "pdf_parser_spark.zip",
+)
 
 
 def tune_for_fat_binary_scan(spark: SparkSession) -> None:
@@ -82,12 +88,11 @@ def get_spark(
     return spark
 
 
-def package_zip_stale(zip_path: str, pkg_root: str | None = None) -> bool:
+def package_zip_stale(zip_path: str) -> bool:
     """True when the deploy zip is missing or any package .py is newer
     than it — a stale committed zip silently ships old code to executors
     (and to spark-submit --py-files users)."""
-    if pkg_root is None:
-        pkg_root = os.path.dirname(os.path.abspath(__file__))
+    pkg_root = os.path.dirname(os.path.abspath(__file__))
     if not os.path.exists(zip_path):
         return True
     zmt = os.path.getmtime(zip_path)
@@ -102,6 +107,26 @@ def package_zip_stale(zip_path: str, pkg_root: str | None = None) -> bool:
     return False
 
 
+def build_package_zip() -> str:
+    """Zip every package .py under its repo-relative path
+    (``pdf_parser_spark/...``) into PACKAGE_ZIP: the archive that
+    addPyFile ships and spark-submit --py-files takes."""
+    import zipfile
+
+    pkg_root = os.path.dirname(os.path.abspath(__file__))
+    repo = os.path.dirname(pkg_root)
+    os.makedirs(os.path.dirname(PACKAGE_ZIP), exist_ok=True)
+    with zipfile.ZipFile(PACKAGE_ZIP, "w", zipfile.ZIP_DEFLATED) as z:
+        for dirpath, _d, files in os.walk(pkg_root):
+            if "__pycache__" in dirpath:
+                continue
+            for fn in sorted(files):
+                if fn.endswith(".py"):
+                    full = os.path.join(dirpath, fn)
+                    z.write(full, os.path.relpath(full, repo))
+    return PACKAGE_ZIP
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Make pdf_parser_spark importable on executor python workers
     regardless of the launch cwd: zip the package and addPyFile once per
@@ -111,23 +136,10 @@ def _ship_package(spark: SparkSession) -> None:
     sc = spark.sparkContext
     if getattr(sc, "_pps_pkg_added", False):
         return
-    import zipfile
-
-    pkg_root = os.path.dirname(os.path.abspath(__file__))
-    repo = os.path.dirname(pkg_root)
-    zip_path = os.path.join(repo, "dist", "pdf_parser_spark.zip")
     try:
-        if package_zip_stale(zip_path, pkg_root):
-            os.makedirs(os.path.dirname(zip_path), exist_ok=True)
-            with zipfile.ZipFile(zip_path, "w", zipfile.ZIP_DEFLATED) as z:
-                for dirpath, _d, files in os.walk(pkg_root):
-                    if "__pycache__" in dirpath:
-                        continue
-                    for fn in sorted(files):
-                        if fn.endswith(".py"):
-                            full = os.path.join(dirpath, fn)
-                            z.write(full, os.path.relpath(full, repo))
-        sc.addPyFile(zip_path)
+        if package_zip_stale(PACKAGE_ZIP):
+            build_package_zip()
+        sc.addPyFile(PACKAGE_ZIP)
     except Exception:
         # read-only checkout or non-local deployment: spark-submit
         # --py-files remains the documented path

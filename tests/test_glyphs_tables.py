@@ -2,6 +2,7 @@
 (the analogues of python/app.py:89-234 with SURVEY.md §7.4.3 quirks)."""
 
 import numpy as np
+import pytest
 
 from pdf_parser_spark.kernels.glyphs import (
     ALPHABET,
@@ -13,7 +14,13 @@ from pdf_parser_spark.kernels.glyphs import (
     TEXT_MARGIN_X,
     TEXT_MARGIN_Y,
 )
-from pdf_parser_spark.kernels.raster import decode, detect_kind, encode
+from pdf_parser_spark.kernels.raster import (
+    RasterError,
+    decode,
+    decode_images,
+    detect_kind,
+    encode,
+)
 from pdf_parser_spark.kernels.tables import (
     detect_table_bboxes,
     extract_table,
@@ -57,6 +64,40 @@ def test_raster_container_roundtrip():
     assert detect_kind(blob) == "pdf"
     assert detect_kind(b"<!DOCTYPE html><html>") == "html"
     assert detect_kind(b"\x00\x01garbage") == "unknown"
+
+
+def _pages_and_images():
+    pages = [blank_page(20, 30), blank_page(20, 30)]
+    img_a = np.arange(12, dtype=np.uint8).reshape(3, 4)
+    img_b = np.full((2, 5), 7, dtype=np.uint8)
+    return pages, [(1, img_a), (1, img_b), (2, img_b)]
+
+
+def test_raster_images_section_index_order():
+    """S4/O4: embedded images come back per 1-based page in idx order;
+    the trailing section never changes the page bytes."""
+    pages, images = _pages_and_images()
+    with_imgs = encode(pages, images=images)
+    assert with_imgs.startswith(encode(pages))
+    got = decode_images(with_imgs)
+    assert sorted(got) == [1, 2]
+    assert [(i, im.shape) for i, im in got[1]] == [(0, (3, 4)), (1, (2, 5))]
+    assert got[1][0][1].tobytes() == images[0][1].tobytes()
+    assert got[1][1][1].tobytes() == images[1][1].tobytes()
+    assert [i for i, _im in got[2]] == [0]
+    assert decode_images(encode(pages)) == {}
+
+
+def test_raster_truncated_images_section_keeps_pages():
+    """A corrupt optional image section fails only decode_images: the
+    pages still decode."""
+    pages, images = _pages_and_images()
+    corrupt = encode(pages, images=images)[:-5]
+    out = decode(corrupt)
+    assert len(out) == 2
+    assert all((o == p).all() for o, p in zip(out, pages))
+    with pytest.raises(RasterError):
+        decode_images(corrupt)
 
 
 def simple_spec(cells, x0=60, y0=40):

@@ -6,31 +6,12 @@
         pdf_parser_spark/jobs/extract.py --input ... --output ... --run-id r1
 """
 
-from __future__ import annotations
-
 import os
-import zipfile
+import sys
 
-REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-
-def build(out: str = "dist/pdf_parser_spark.zip") -> str:
-    out_path = os.path.join(REPO, out)
-    os.makedirs(os.path.dirname(out_path), exist_ok=True)
-    pkg_root = os.path.join(REPO, "pdf_parser_spark")
-    with zipfile.ZipFile(out_path, "w", zipfile.ZIP_DEFLATED) as z:
-        for dirpath, _dirnames, filenames in os.walk(pkg_root):
-            if "__pycache__" in dirpath:
-                continue
-            for fn in sorted(filenames):
-                if not fn.endswith(".py"):
-                    continue
-                full = os.path.join(dirpath, fn)
-                rel = os.path.relpath(full, REPO)
-                z.write(full, rel)
-    return out_path
-
+from pdf_parser_spark.session import build_package_zip  # noqa: E402
 
 if __name__ == "__main__":
-    p = build()
-    print(p)
+    print(build_package_zip())
