@@ -10,6 +10,11 @@ Conventions:
   and dilation (max). With a constant-0 border, k iterations of a
   length-L min/max filter equal one pass with window k*(L-1)+1, which we
   exploit for speed.
+
+Every primitive is whole-array numpy, with no Python loop over pixels,
+runs or rows: a window-W min/max is ⌈log₂W⌉ shifted slice ops, and
+labelling works on row runs (adjacency by one ``searchsorted``, merging
+by min-label hooking plus pointer jumping, painting by one cumsum).
 """
 
 from __future__ import annotations
@@ -21,7 +26,12 @@ def otsu_threshold(img: np.ndarray) -> int:
     """Otsu's method on a 256-bin histogram: threshold t maximizing
     inter-class variance; pixels > t are foreground (255). Ties broken by
     the LOWEST t (our pinned spec; cv2's tie-break is unspecified)."""
-    hist = np.bincount(img.ravel(), minlength=256).astype(np.float64)
+    # paper (255) dominates a page: count it with one compare and bincount
+    # only the rest (bincount widens every input byte to intp)
+    flat = img.ravel()
+    rest = flat[flat != 255]
+    hist = np.bincount(rest, minlength=256).astype(np.float64)
+    hist[255] = flat.size - rest.size
     total = hist.sum()
     if total == 0:
         return 0
@@ -34,131 +44,62 @@ def otsu_threshold(img: np.ndarray) -> int:
     return int(np.argmax(sigma_b))  # argmax returns the first (lowest) max
 
 
+def _to_binary(mask: np.ndarray) -> np.ndarray:
+    """bool mask -> fresh uint8 {0, 255} image in one pass."""
+    return np.multiply(mask, np.uint8(255), dtype=np.uint8)
+
+
 def threshold_binary_otsu(img: np.ndarray) -> np.ndarray:
     """cv2.threshold(img, 128, 255, BINARY|OTSU) equivalent: the 128 is
     ignored when OTSU is set (python/app.py:119,151)."""
-    t = otsu_threshold(img)
-    return np.where(img > t, np.uint8(255), np.uint8(0))
+    return _to_binary(img > otsu_threshold(img))
 
 
-def _vanherk(ap: np.ndarray, window: int, op, identity: int, axis: int = 1) -> np.ndarray:
-    """van Herk/Gil-Werman running min/max over axis=1 of the padded
-    array: block prefix + suffix scans, then one elementwise combine —
-    3 passes total, O(1) memory reads per pixel regardless of window.
-    (A sliding_window_view + reduce formulation reads every pixel
-    ``window`` times; at 1 MB pages x 32 parallel Python workers that
-    saturates DRAM bandwidth and *inverts* core scaling — measured
-    local[32] slower than local[8] before this.)
+def _slide(a: np.ndarray, window: int, axis: int, op) -> np.ndarray:
+    """Sliding ``op`` (an idempotent min/max/AND/OR) over ``window``
+    pixels along ``axis``, with a constant-0 border and the cv2 anchor
+    ``window // 2``.
 
-    Axis-native (no transposes): blocks are formed by reshaping the
-    filtered axis itself, so every accumulate pass streams row-contiguous
-    memory. Returns op over [j, j+window-1] for j in 0..m-window."""
-    if axis == 1:
-        h, m = ap.shape
-        nb = -(-m // window)
-        padded = np.full((h, nb * window), identity, dtype=ap.dtype)
-        padded[:, :m] = ap
-        blocks = padded.reshape(h, nb, window)
-        pref = op.accumulate(blocks, axis=2).reshape(h, nb * window)
-        suff = op.accumulate(blocks[:, :, ::-1], axis=2)[:, :, ::-1].reshape(
-            h, nb * window
-        )
-        return op(suff[:, : m - window + 1], pref[:, window - 1 : m])
-    m, w_cols = ap.shape
-    nb = -(-m // window)
-    padded = np.full((nb * window, w_cols), identity, dtype=ap.dtype)
-    padded[:m, :] = ap
-    blocks = padded.reshape(nb, window, w_cols)
-    pref = op.accumulate(blocks, axis=1).reshape(nb * window, w_cols)
-    suff = op.accumulate(blocks[:, ::-1, :], axis=1)[:, ::-1, :].reshape(
-        nb * window, w_cols
-    )
-    return op(suff[: m - window + 1, :], pref[window - 1 : m, :])
-
-
-def _sliding_1d(
-    a: np.ndarray, window: int, axis: int, op, identity: int
-) -> np.ndarray:
-    """Sliding-window min/max along ``axis`` with constant-0 padding and
-    cv2-style anchor (window // 2)."""
+    Log-step doubling on one zero-padded frame: after the step with span
+    s, frame[i] holds op over [i, i+2s), so ⌊log₂W⌋ in-place slice ops
+    reach the largest power of two p <= W, and one more op of two
+    overlapping p-windows (idempotence makes the overlap harmless) covers
+    W. Each op streams row-contiguous memory; nothing is reshaped or
+    transposed."""
     if window <= 1:
         return a
-    pad_before = window // 2
-    pad_after = window - 1 - pad_before
-    pads = [(0, 0), (0, 0)]
-    pads[axis] = (pad_before, pad_after)
-    ap = np.pad(a, pads, mode="constant", constant_values=0)
-    return _vanherk(ap, window, op, identity, axis)
 
+    def cut(lo: int, hi: int) -> tuple[slice, ...]:
+        return (slice(None),) * axis + (slice(lo, hi),)
 
-def _sliding_min_1d(a: np.ndarray, window: int, axis: int) -> np.ndarray:
-    return _sliding_1d(a, window, axis, np.minimum, 255)
-
-
-def _sliding_max_1d(a: np.ndarray, window: int, axis: int) -> np.ndarray:
-    return _sliding_1d(a, window, axis, np.maximum, 0)
+    n = a.shape[axis]
+    length = n + window - 1
+    shape = list(a.shape)
+    shape[axis] = length
+    frame = np.zeros(shape, dtype=a.dtype)
+    frame[cut(window // 2, window // 2 + n)] = a
+    span = 1
+    while 2 * span <= window:
+        head = frame[cut(0, length - span)]
+        op(head, frame[cut(span, length)], out=head)
+        length -= span
+        span *= 2
+    if span < window:
+        return op(frame[cut(0, n)], frame[cut(window - span, window - span + n)])
+    return frame[cut(0, n)]
 
 
 def erode_rect(img: np.ndarray, kw: int, kh: int, iterations: int = 1) -> np.ndarray:
     """Erosion (min filter) with a kw x kh rectangular kernel, ``iterations``
     times. Equivalent single-pass window: n*(k-1)+1 per axis (valid because
     the constant-0 border is the global minimum)."""
-    ww = iterations * (kw - 1) + 1
-    wh = iterations * (kh - 1) + 1
-    out = _sliding_min_1d(img, ww, axis=1) if ww > 1 else img
-    if wh > 1:
-        out = _sliding_min_1d(out, wh, axis=0)
-    return out
+    out = _slide(img, iterations * (kw - 1) + 1, 1, np.minimum)
+    return _slide(out, iterations * (kh - 1) + 1, 0, np.minimum)
 
 
 def dilate_rect(img: np.ndarray, kw: int, kh: int, iterations: int = 1) -> np.ndarray:
-    ww = iterations * (kw - 1) + 1
-    wh = iterations * (kh - 1) + 1
-    out = _sliding_max_1d(img, ww, axis=1) if ww > 1 else img
-    if wh > 1:
-        out = _sliding_max_1d(out, wh, axis=0)
-    return out
-
-
-def _sliding_bool(bp: np.ndarray, window: int, axis: int, op, identity: bool, pad_value: bool) -> np.ndarray:
-    """Sliding bool AND/OR via van Herk scans, ALLOCATION-LEAN: the
-    border pad and the block pad share one buffer, both scans accumulate
-    in place (the suffix on a contiguous reversed copy), and only the
-    combined output is a fresh array. The original formulation's six
-    full-frame array writes per pass made the kernel memory-bandwidth
-    bound at high core counts (this is the hottest per-page loop)."""
-    if window <= 1:
-        return bp
-    pad_before = window // 2
-    if axis == 1:
-        h, m = bp.shape
-        mp = m + window - 1
-        nb = -(-mp // window)
-        buf = np.empty((h, nb * window), dtype=bool)
-        buf[:, :pad_before] = pad_value
-        buf[:, pad_before : pad_before + m] = bp
-        buf[:, pad_before + m : mp] = pad_value  # border pad (after)
-        buf[:, mp:] = identity                   # block padding
-        blocks = buf.reshape(h, nb, window)
-        rev = np.ascontiguousarray(blocks[:, :, ::-1])
-        op.accumulate(blocks, axis=2, out=blocks)  # prefix, in place
-        op.accumulate(rev, axis=2, out=rev)        # suffix, in place
-        suff = rev[:, :, ::-1].reshape(h, nb * window)
-        return op(suff[:, : mp - window + 1], buf[:, window - 1 : mp])
-    m, w_cols = bp.shape
-    mp = m + window - 1
-    nb = -(-mp // window)
-    buf = np.empty((nb * window, w_cols), dtype=bool)
-    buf[:pad_before] = pad_value
-    buf[pad_before : pad_before + m] = bp
-    buf[pad_before + m : mp] = pad_value
-    buf[mp:] = identity
-    blocks = buf.reshape(nb, window, w_cols)
-    rev = np.ascontiguousarray(blocks[:, ::-1, :])
-    op.accumulate(blocks, axis=1, out=blocks)
-    op.accumulate(rev, axis=1, out=rev)
-    suff = rev[:, ::-1, :].reshape(nb * window, w_cols)
-    return op(suff[: mp - window + 1], buf[window - 1 : mp])
+    out = _slide(img, iterations * (kw - 1) + 1, 1, np.maximum)
+    return _slide(out, iterations * (kh - 1) + 1, 0, np.maximum)
 
 
 def open_rect_binary(img: np.ndarray, kw: int, kh: int, iterations: int = 1) -> np.ndarray:
@@ -166,113 +107,113 @@ def open_rect_binary(img: np.ndarray, kw: int, kh: int, iterations: int = 1) -> 
     {0,255} images: identical output to
     ``dilate_rect(erode_rect(img, kw, kh, n), kw, kh, n)`` (pinned by
     test_pixel), but the whole chain runs in the bool domain — one
-    uint8->bool conversion, logical accumulates throughout, one
-    conversion back. This is the ruling-line-mask hot path (erode x3 /
-    dilate x3 per axis per page, python/app.py:119-137)."""
+    uint8->bool conversion, AND/OR slides throughout, one conversion
+    back. This is the ruling-line-mask hot path (erode x3 / dilate x3
+    per axis per page, python/app.py:119-137)."""
     ww = iterations * (kw - 1) + 1
     wh = iterations * (kh - 1) + 1
     b = img != 0
     # erosion: constant-0 border (False), min == AND
-    if ww > 1:
-        b = _sliding_bool(b, ww, 1, np.logical_and, True, False)
-    if wh > 1:
-        b = _sliding_bool(b, wh, 0, np.logical_and, True, False)
+    b = _slide(_slide(b, ww, 1, np.logical_and), wh, 0, np.logical_and)
     # dilation: constant-0 border, max == OR
-    if ww > 1:
-        b = _sliding_bool(b, ww, 1, np.logical_or, False, False)
-    if wh > 1:
-        b = _sliding_bool(b, wh, 0, np.logical_or, False, False)
-    return b.astype(np.uint8) * 255
+    b = _slide(_slide(b, ww, 1, np.logical_or), wh, 0, np.logical_or)
+    return _to_binary(b)
+
+
+def _row_runs(fg: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """Maximal horizontal runs of a bool image as global keys
+    row*(w+1)+col: [start, end) per run, in row-major order. The +1 is a
+    background separator column, so no run crosses a row boundary."""
+    h, w = fg.shape
+    flat = np.zeros(h * (w + 1) + 1, dtype=bool)  # [0] is a leading 0
+    flat[1:].reshape(h, w + 1)[:, :w] = fg
+    # key k is flat[k+1]; runs alternate start, end from the leading 0
+    edges = np.flatnonzero(flat[1:] != flat[:-1])
+    return edges[0::2], edges[1::2]
 
 
 def connected_components(binary: np.ndarray) -> tuple[np.ndarray, int]:
     """4-connected component labeling of nonzero pixels (our spec's
     replacement for cv2.findContours on white regions, python/app.py:154).
-    Returns (labels int32 array with 0 = background, n_labels).
-
-    Row-run union-find: vectorized over runs, not pixels — fast enough for
-    ~1e6-pixel pages inside an Arrow batch.
-    """
+    Returns (labels int32 array with 0 = background, n_labels), numbered
+    1..n in first-encounter (row-major) order."""
     h, w = binary.shape
-    fg = binary != 0
-    labels = np.zeros((h, w), dtype=np.int32)
-
-    # 1) extract ALL runs in one vectorized pass: pad a sentinel column of
-    #    zeros on each side so every run starts and ends within its row
-    padded = np.zeros((h, w + 2), dtype=np.int8)
-    padded[:, 1:-1] = fg
-    d = np.diff(padded, axis=1)
-    ys_s, starts = np.nonzero(d == 1)  # run starts (column index in 0..w-1)
-    ys_e, ends = np.nonzero(d == -1)  # run ends (exclusive)
+    starts, ends = _row_runs(binary != 0)
     n_runs = len(starts)
     if n_runs == 0:
-        return labels, 0
-    # np.nonzero is row-major, so starts/ends pair up per row in order
-    assert (ys_s == ys_e).all()
+        return np.zeros((h, w), dtype=np.int32), 0
 
-    # 2) union-find over run-adjacency edges: run i (row y) touches run j
-    #    (row y-1) iff starts[i] < ends[j] and ends[i] > starts[j].
-    #    Edges found via searchsorted against the previous row's runs.
-    row_first = np.searchsorted(ys_s, np.arange(h + 1))  # run range per row
-    parent = np.arange(n_runs, dtype=np.int64)
+    # run-adjacency edges, all at once: run i touches run j of the row
+    # above iff their columns overlap. Shifting the keys one row down
+    # (+ w+1) makes that key overlap, and because runs are sorted and
+    # disjoint the partners of run i are the contiguous range [lo, hi).
+    below = w + 1
+    lo = np.searchsorted(ends + below, starts, side="right")
+    hi = np.searchsorted(starts + below, ends, side="left")
+    counts = hi - lo
+    n_edges = int(counts.sum())
+    parent = np.arange(n_runs)
+    if n_edges:
+        src = np.repeat(parent, counts)
+        dst = np.repeat(lo - (np.cumsum(counts) - counts), counts) + np.arange(n_edges)
+        # min-label hooking: each root joined by an edge to a smaller root
+        # points at the smallest such root; pointer jumping then flattens
+        # every tree to a star. parent[i] <= i throughout, so each final
+        # root is its component's first run in row-major order.
+        while True:
+            ps, pd = parent[src], parent[dst]
+            cross = ps != pd
+            if not cross.any():
+                break
+            ps, pd = ps[cross], pd[cross]
+            np.minimum.at(parent, np.maximum(ps, pd), np.minimum(ps, pd))
+            while True:
+                grand = parent[parent]
+                if np.array_equal(grand, parent):
+                    break
+                parent = grand
+    # roots in run order == first-encounter order
+    rank = np.cumsum(parent == np.arange(n_runs), dtype=np.int32)
+    run_labels = rank[parent]
 
-    def find(x: int) -> int:
-        root = x
-        while parent[root] != root:
-            root = parent[root]
-        while parent[x] != root:
-            parent[x], x = root, parent[x]
-        return root
-
-    for y in range(1, h):
-        a0, a1 = row_first[y], row_first[y + 1]  # runs in row y
-        p0, p1 = row_first[y - 1], row_first[y]  # runs in row y-1
-        if a0 == a1 or p0 == p1:
-            continue
-        # for each run i in row y: overlapping prev runs are those with
-        # start < ends[i] and end > starts[i] — a contiguous range because
-        # runs are sorted and disjoint
-        lo = np.searchsorted(ends[p0:p1], starts[a0:a1], side="right")
-        hi = np.searchsorted(starts[p0:p1], ends[a0:a1], side="left")
-        for k in range(a1 - a0):
-            for j in range(lo[k], hi[k]):
-                ra, rb = find(a0 + k), find(p0 + j)
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
-    # 3) renumber roots 1..n in first-encounter (row-major) order and
-    #    paint all run spans with one vectorized flat assignment
-    roots = np.array([find(i) for i in range(n_runs)], dtype=np.int64)
-    uniq, first_idx = np.unique(roots, return_index=True)
-    order = np.argsort(first_idx)
-    remap = np.empty(len(uniq), dtype=np.int32)
-    remap[order] = np.arange(1, len(uniq) + 1, dtype=np.int32)
-    run_labels = remap[np.searchsorted(uniq, roots)]
-
-    lengths = ends - starts
-    total = int(lengths.sum())
-    span_starts = np.cumsum(lengths) - lengths
-    offsets = np.arange(total) - np.repeat(span_starts, lengths)
-    flat_idx = np.repeat(ys_s * w + starts, lengths) + offsets
-    labels.ravel()[flat_idx] = np.repeat(run_labels, lengths)
-    return labels, len(uniq)
+    # paint: +label at each run start, -label at its end, one cumsum
+    # (keys drop the separator column: row*(w+1)+col -> row*w+col)
+    rows = starts // below
+    delta = np.zeros(h * w + 1, dtype=np.int32)
+    delta[starts - rows] = run_labels
+    delta[ends - rows] -= run_labels
+    labels = np.cumsum(delta[:-1], dtype=np.int32).reshape(h, w)
+    return labels, int(rank[-1])
 
 
 def component_bboxes(labels: np.ndarray, n: int) -> list[tuple[int, int, int, int]]:
     """Per-label bounding boxes as (x, y, w, h) — cv2.boundingRect shape
     (python/app.py:167,181) — indexed in label order (first-encounter
-    row-major, our pinned contour-order spec)."""
-    ys, xs = np.nonzero(labels)
-    if len(ys) == 0:
+    row-major, our pinned contour-order spec). Labels with no pixel get
+    (0, 0, 0, 0). Works on runs of equal label, not on every pixel."""
+    w = labels.shape[1]
+    flat = labels.ravel()
+    if not flat.any():
         return []
-    lab = labels[ys, xs]
+    # a run starts where the label changes or a row begins
+    new = np.empty(flat.size, dtype=bool)
+    new[0] = True
+    np.not_equal(flat[1:], flat[:-1], out=new[1:])
+    new[::w] = True
+    first = np.flatnonzero(new)
+    last = np.append(first[1:], flat.size) - 1
+    lab = flat[first]
+    fg = lab != 0
+    first, last, lab = first[fg], last[fg], lab[fg]
+    ys = first // w
     big = np.iinfo(np.int64).max
     x0 = np.full(n + 1, big)
     y0 = np.full(n + 1, big)
     x1 = np.full(n + 1, -1)
     y1 = np.full(n + 1, -1)
-    np.minimum.at(x0, lab, xs)
+    np.minimum.at(x0, lab, first - ys * w)
     np.minimum.at(y0, lab, ys)
-    np.maximum.at(x1, lab, xs)
+    np.maximum.at(x1, lab, last - ys * w)
     np.maximum.at(y1, lab, ys)
     return [
         (int(x0[i]), int(y0[i]), int(x1[i] - x0[i] + 1), int(y1[i] - y0[i] + 1))

@@ -4,8 +4,9 @@ The sandbox has no PDF decoder (no fitz/PyMuPDF — SURVEY.md §7.0); the
 reference's algorithmic content starts at the grayscale page raster
 (python/app.py:116-120). PDF-like documents therefore carry their
 pre-rasterized pages in ``html:binary`` using this trivial deterministic
-container; ``decode_pages`` (the engine's analogue of the reference's
-``convert_pdf_to_image``, python/app.py:28-81) parses it.
+container; ``decode`` (the engine's analogue of the reference's
+``convert_pdf_to_image``, python/app.py:28-81) parses it, called from
+``oracle.extract_document`` for every document routed as 'pdf'.
 
 Layout (little-endian):
     magic   4B   b'RSTR'
@@ -71,7 +72,7 @@ def encode(
     return b"".join(out)
 
 
-def _decode_pages_off(blob: bytes) -> tuple[list[np.ndarray], int]:
+def _parse_pages(blob: bytes) -> tuple[list[np.ndarray], int]:
     if len(blob) < 6 or blob[:4] != MAGIC:
         raise RasterError("bad magic")
     (npages,) = struct.unpack_from("<H", blob, 4)
@@ -101,7 +102,7 @@ def decode(blob: bytes) -> list[np.ndarray]:
     python/app.py:32-36). Any trailing embedded-images section is
     ignored here (text extraction never reads it — the reference's
     images are a disk side-output, python/app.py:44-57)."""
-    return _decode_pages_off(blob)[0]
+    return _parse_pages(blob)[0]
 
 
 def decode_images(blob: bytes) -> dict[int, list[tuple[int, np.ndarray]]]:
@@ -109,7 +110,7 @@ def decode_images(blob: bytes) -> dict[int, list[tuple[int, np.ndarray]]]:
     [(idx, pixels), ...] in idx order (O4). Empty dict when the blob
     predates the section or has none. Raises RasterError only on a
     corrupt images section — a valid pre-S4 blob never raises."""
-    _pages, off = _decode_pages_off(blob)
+    _pages, off = _parse_pages(blob)
     if off + 6 > len(blob) or blob[off : off + 4] != IMAGES_MAGIC:
         return {}
     (count,) = struct.unpack_from("<H", blob, off + 4)

@@ -16,8 +16,10 @@ local[32] (SURVEY.md §4):
   3-byte rows -> one batch per partition;
 - python worker reuse: the UDF stages are called per batch, fork cost
   must amortize;
-- shuffle partitions sized for the local harness; a cluster submit
-  overrides via --conf (jobs/extract.py exposes it).
+- shuffle partitions sized for the local harness's relational queries;
+  a cluster submit overrides via --conf. Python stages are sized by
+  task slots instead (pipeline.run_extraction runs one task per core
+  per wave), because each Python task has a fixed set-up cost.
 """
 
 from __future__ import annotations
